@@ -25,11 +25,14 @@ object WideAgg {
     * Returns a small DataFrame (col_name, null_rate) — one row per column.
     * The 0/1 indicator sums are exact in double, so the rate is
     * bit-deterministic across engines. */
-  def nullProfile(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch): DataFrame = {
-    val spark = df.sparkSession
-    val rates = runBatched(df, cols, c => avg(col(c).isNull.cast(DoubleType)), batch)
-    toDf(spark, rates, "col_name", "null_rate")
-  }
+  def nullProfile(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch): DataFrame =
+    toDf(df.sparkSession, nullRates(df, cols, batch), "col_name", "null_rate")
+
+  /** [[nullProfile]]'s rates as driver pairs, in `cols` order (None for an
+    * empty input). */
+  def nullRates(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch)
+      : Seq[(String, Option[Double])] =
+    runBatched(df, cols, c => avg(col(c).isNull.cast(DoubleType)), batch)
 
   /** Per-column sum (reference A2: 41 target sums in one pass). Plain
     * double accumulation — fast path; use [[sumProfileExact]] when the

@@ -1,7 +1,7 @@
 package graft.io
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Output sinks (SURVEY.md §2.1 S4–S6): CSV golden tables, JSON summary,
   * Markdown report. The reference's entire deliverable is 29 CSVs + 1
@@ -16,14 +16,22 @@ import org.apache.spark.sql.DataFrame
   */
 object Sinks {
 
-  /** Driver-side CSV writer for small aggregated tables (header + RFC-ish
-    * quoting). Deterministic: writes rows in the DataFrame's order — give
-    * it a sorted frame. */
+  /** Driver-side CSV writer for small aggregated tables: collects the
+    * frame (refusing more than `maxRows`) and renders it with
+    * [[writeRows]]. Deterministic: writes rows in the DataFrame's order —
+    * give it a sorted frame. */
   def writeCsv(df: DataFrame, path: String, maxRows: Int = 100000): Unit = {
     val rows = df.limit(maxRows + 1).collect()
     require(rows.length <= maxRows,
       s"writeCsv($path): > $maxRows rows — use writeCsvDistributed for large outputs")
-    val cols = df.columns
+    writeRows(df.columns.toSeq, rows.toSeq, path)
+  }
+
+  /** The CSV formatter for rows already on the driver: a header line, then
+    * one line per row in the given order (RFC-ish quoting; null is an
+    * empty cell, every other value renders by `toString`, so a row built
+    * from boxed Scala values writes the same bytes as its collected twin). */
+  def writeRows(header: Seq[String], rows: Seq[Row], path: String): Unit = {
     def cell(v: Any): String = v match {
       case null => ""
       case s: String if s.contains(",") || s.contains("\"") || s.contains("\n") =>
@@ -31,13 +39,11 @@ object Sinks {
       case other => other.toString
     }
     val sb = new StringBuilder
-    sb.append(cols.mkString(",")).append('\n')
+    sb.append(header.mkString(",")).append('\n')
     rows.foreach { r =>
-      sb.append(cols.indices.map(i => cell(r.get(i))).mkString(",")).append('\n')
+      sb.append(header.indices.map(i => cell(r.get(i))).mkString(",")).append('\n')
     }
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, sb.toString)
+    writeText(sb.toString, path)
   }
 
   /** Distributed CSV sink for large outputs (S4 scale path). */
@@ -107,20 +113,23 @@ object Sinks {
 
   /** Fixed-width pretty table of the first `n` rows (S6 report blocks —
     * mirrors the reference's `pretty` helper, `public_eda_pipeline
-    * .py:46-49`). */
-  def pretty(df: DataFrame, n: Int = 10): String = {
-    val rows = df.limit(n).collect()
-    val cols = df.columns
-    val cells = rows.map(r => cols.indices.map(i => Option(r.get(i)).map {
+    * .py:46-49`); rendered by [[prettyRows]]. */
+  def pretty(df: DataFrame, n: Int = 10): String =
+    prettyRows(df.columns.toSeq, df.limit(n).collect().toSeq, n)
+
+  /** The pretty formatter for rows already on the driver: the first `n`
+    * rows right-aligned under `header`, doubles as `%.6g`, null as "null". */
+  def prettyRows(header: Seq[String], rows: Seq[Row], n: Int = 10): String = {
+    val cells = rows.take(n).map(r => header.indices.map(i => Option(r.get(i)).map {
       case d: Double => f"$d%.6g"
       case other => other.toString
-    }.getOrElse("null")).toArray)
-    val widths = cols.indices.map(i =>
-      (cols(i).length +: cells.map(_(i).length)).max)
+    }.getOrElse("null")))
+    val widths = header.indices.map(i =>
+      (header(i).length +: cells.map(_(i).length)).max)
     def line(vals: Seq[String]): String =
       vals.zip(widths).map { case (v, w) => v.reverse.padTo(w, ' ').reverse }
         .mkString("  ")
-    (line(cols.toSeq) +: cells.map(c => line(c.toSeq)).toSeq).mkString("\n")
+    (line(header) +: cells.map(line)).mkString("\n")
   }
 
   def writeText(s: String, path: String): Unit = {

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{FeatureCatalog, Relational, Sampling, WideAgg}
 import graft.io.Sinks
 import graft.ml.{Adversarial, Clustering}
@@ -21,12 +23,70 @@ import graft.stats.{Auc, Correlations, StatTests}
   *   12 adversarial P:410-459 · 13 linear screen P:464-536
   *   14 universality P:539-594 · 15 whales P:599-669 · 16 summary P:674-905
   *
-  * Scale: every block that touches full-width input runs as Spark jobs
-  * (batched wide aggs, one-pass Gramians, sampled joins with pushed-down
-  * hash filters); only post-aggregation artifacts (≤ ~20k rows) cross to
-  * the driver for CSV/stats.
+  * Scale: a pass over input rows runs in Spark — scans, batched wide
+  * aggregates, one-pass Gramians, deciles, AUC, GBT, the cross-corr grid,
+  * the dictionaries and the whale contingencies. Its result, a
+  * post-aggregation table (≤ ~100k rows, typically a few dozen), reaches
+  * the driver exactly once, and everything after that — sorts, limits,
+  * top-k, rollups, medians, the pair ⋈ corr join, CSVs and the report —
+  * is driver code over those rows with Spark's ORDER BY semantics
+  * ([[sortRows]]). Driver rows never become a DataFrame again: a job per
+  * small table costs more in scheduling than the table's work.
   */
 object EdaPipeline {
+
+  /** One ORDER BY key over driver rows: a column index and a direction. */
+  final case class By(index: Int, desc: Boolean = false)
+
+  /** Spark's ordering of doubles: NaN largest, −0.0 = 0.0. */
+  val SqlDouble: Ordering[Double] = (x, y) => SQLOrderingUtil.compareDoubles(x, y)
+
+  private def compareValues(a: Any, b: Any): Int = (a, b) match {
+    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    case (x: Int, y: Int) => java.lang.Integer.compare(x, y)
+    case _ => throw new IllegalArgumentException(s"no SQL order between $a and $b")
+  }
+
+  /** Driver rows in the order Spark's `ORDER BY` gives them: asc puts
+    * nulls first, desc puts them last; doubles order as [[SqlDouble]],
+    * strings by UTF-8 bytes. Stable, so rows that tie on every key keep
+    * their input order. */
+  def sortRows(rows: Seq[Row], keys: By*): Seq[Row] =
+    rows.sorted(new Ordering[Row] {
+      def compare(a: Row, b: Row): Int = keys.iterator.map { case By(i, desc) =>
+        (a.isNullAt(i), b.isNullAt(i)) match {
+          case (true, true) => 0
+          case (true, false) => if (desc) 1 else -1
+          case (false, true) => if (desc) -1 else 1
+          case _ =>
+            val c = compareValues(a.get(i), b.get(i))
+            if (desc) -c else c
+        }
+      }.find(_ != 0).getOrElse(0)
+    })
+
+  /** Rows sorted by (`group`, `order`…), each with its 1-based rank inside
+    * its `group` value: `row_number() OVER (PARTITION BY group ORDER BY
+    * order…)`, in the order of `ORDER BY group, rank`. */
+  def rankWithin(rows: Seq[Row], group: Int, order: By*): Seq[(Row, Int)] =
+    sortRows(rows, By(group) +: order: _*).scanLeft((null: Row, 0)) { case ((prev, rk), r) =>
+      (r, if (prev != null && prev.get(group) == r.get(group)) rk + 1 else 1)
+    }.tail
+
+  /** Spark's `avg` over driver values: the running sum over the count. */
+  def mean(xs: Seq[Double]): Double = xs.foldLeft(0.0)(_ + _) / xs.size
+
+  /** Spark's `median` (`percentile(x, 0.5)`) of non-empty driver values:
+    * the middle value, or the linear interpolation of the two middle ones. */
+  def median(xs: Seq[Double]): Double = {
+    require(xs.nonEmpty, "median of no values")
+    val s = xs.sorted(SqlDouble).toIndexedSeq
+    val pos = (s.size - 1) * 0.5
+    val (lo, hi) = (pos.floor.toInt, pos.ceil.toInt)
+    if (lo == hi || s(lo) == s(hi)) s(lo) else (hi - pos) * s(lo) + (pos - lo) * s(hi)
+  }
 
   final case class Result(
       trainRows: Long, testRows: Long,
@@ -41,6 +101,8 @@ object EdaPipeline {
   def run(spark: SparkSession, inputDir: String, outDir: String): Result = {
     def load(n: String) = spark.read.parquet(s"$inputDir/$n.parquet")
     def out(n: String) = s"$outDir/$n"
+    def csv(n: String, header: Seq[String], rows: Seq[Row]): Unit =
+      Sinks.writeRows(header, rows, out(n))
     // per-block wall clock (the scaling-curve instrument, FIXTURES.md):
     // prints at block END — the delta since the previous tick
     val tBlock = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
@@ -70,75 +132,64 @@ object EdaPipeline {
       val pos = sums(t).map(_.toLong).getOrElse(0L)
       (t, FeatureCatalog.targetFamily(t), pos, pos.toDouble / trainRows)
     }
-    import spark.implicits._
-    val targetStatsDf = targetStats.toDF("target", "family", "positive_count", "positive_rate")
-      .orderBy(col("positive_count").desc, col("target"))
-    Sinks.writeCsv(targetStatsDf, out("target_stats.csv"))
-    val familyStats = targetStatsDf.groupBy(col("family"))
-      .agg(count(lit(1)).as("n_targets"), avg(col("positive_rate")).as("avg_rate"),
-        min(col("positive_rate")).as("min_rate"), max(col("positive_rate")).as("max_rate"))
-      .orderBy(col("family"))
-    Sinks.writeCsv(familyStats, out("target_family_stats.csv"))
+    val targetStatsHeader = Seq("target", "family", "positive_count", "positive_rate")
+    val targetStatsRows = sortRows(targetStats.map(Row.fromTuple), By(2, desc = true), By(0))
+    csv("target_stats.csv", targetStatsHeader, targetStatsRows)
+    val familyHeader = Seq("family", "n_targets", "avg_rate", "min_rate", "max_rate")
+    val familyRows = sortRows(
+      targetStatsRows.groupBy(_.getString(1)).toSeq.map { case (family, rs) =>
+        val rates = rs.map(_.getDouble(3))
+        Row(family, rs.size.toLong, mean(rates), rates.min(SqlDouble), rates.max(SqlDouble))
+      }, By(0))
+    csv("target_family_stats.csv", familyHeader, familyRows)
 
     tick("2_target_stats")
     // ---- 3: opened-targets distribution ------------------------------------
-    val opened = trainTarget.withColumn("n_opened", WideAgg.horizontalSum(targets))
-    Sinks.writeCsv(
-      opened.groupBy(col("n_opened")).agg(count(lit(1)).as("n_customers")).orderBy(col("n_opened")),
-      out("opened_targets_distribution.csv"))
+    val openedRows = sortRows(
+      trainTarget.groupBy(WideAgg.horizontalSum(targets).as("n_opened"))
+        .agg(count(lit(1)).as("n_customers")).collect().toSeq,
+      By(0))
+    csv("opened_targets_distribution.csv", Seq("n_opened", "n_customers"), openedRows)
 
     tick("3_opened_dist")
     // ---- 4: pair co-occurrence + lift --------------------------------------
-    val pairDf = Correlations.pairLift(trainTarget, targets)
-    Sinks.writeCsv(pairDf.orderBy(col("col_a"), col("col_b")), out("target_pair_stats.csv"))
-    Sinks.writeCsv(
-      pairDf.where(col("co_count") >= 10)
-        .orderBy(col("pair_lift").desc, col("col_a"), col("col_b")).limit(30),
-      out("target_top_pairs.csv"))
+    val pairHeader = Seq("col_a", "col_b", "count_a", "count_b", "co_count", "pair_lift")
+    val pairRows = sortRows(Correlations.pairLiftGramianRows(trainTarget, targets), By(0), By(1))
+    csv("target_pair_stats.csv", pairHeader, pairRows)
+    val topLiftPairs =
+      sortRows(pairRows.filter(_.getLong(4) >= 10), By(5, desc = true), By(0), By(1)).take(30)
+    csv("target_top_pairs.csv", pairHeader, topLiftPairs)
 
     tick("4_pair_lift")
     // ---- 5: 41×41 corr matrix + antagonist slice ---------------------------
     val corrM = Correlations.corrMatrix(trainTarget, targets)
-    val corrRows = targets.indices.map { i =>
-      org.apache.spark.sql.Row.fromSeq(targets(i) +: targets.indices.map(j => corrM(i, j)))
-    }
-    val corrSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("target", org.apache.spark.sql.types.StringType) +:
-        targets.map(t => org.apache.spark.sql.types.StructField(t,
-          org.apache.spark.sql.types.DoubleType)))
-    import scala.jdk.CollectionConverters._
-    Sinks.writeCsv(spark.createDataFrame(corrRows.asJava, corrSchema), out("target_corr_matrix.csv"))
+    csv("target_corr_matrix.csv", "target" +: targets, targets.indices.map { i =>
+      Row.fromSeq(targets(i) +: targets.indices.map(j => corrM(i, j)))
+    })
     // pair tables enriched with the pearson corr of each pair
     // (reference `P:168-173`): top-30 positive / negative / lift slices
-    val corrPairs = (for { i <- targets.indices; j <- targets.indices if i < j }
-      yield (targets(i), targets(j), corrM(i, j))).toDF("col_a", "col_b", "corr")
-    val pairWithCorr = pairDf.join(corrPairs, Seq("col_a", "col_b"), "left")
-    Sinks.writeCsv(
-      pairWithCorr.orderBy(col("corr").desc, col("col_a"), col("col_b")).limit(30),
-      out("top_positive_target_pairs.csv"))
-    Sinks.writeCsv(
-      pairWithCorr.orderBy(col("corr").asc, col("col_a"), col("col_b")).limit(30),
-      out("top_negative_target_pairs.csv"))
-    Sinks.writeCsv(
-      pairWithCorr.where(col("co_count") >= 10)
-        .orderBy(col("pair_lift").desc, col("col_a"), col("col_b")).limit(30),
-      out("top_cooccurrence_lift_pairs.csv"))
+    val targetIdx = targets.zipWithIndex.toMap
+    val pairCorrHeader = pairHeader :+ "corr"
+    def withCorr(r: Row): Row =
+      Row.fromSeq(r.toSeq :+ corrM(targetIdx(r.getString(0)), targetIdx(r.getString(1))))
+    val pairWithCorr = pairRows.map(withCorr)
+    csv("top_positive_target_pairs.csv", pairCorrHeader,
+      sortRows(pairWithCorr, By(6, desc = true), By(0), By(1)).take(30))
+    csv("top_negative_target_pairs.csv", pairCorrHeader,
+      sortRows(pairWithCorr, By(6), By(0), By(1)).take(30))
+    csv("top_cooccurrence_lift_pairs.csv", pairCorrHeader, topLiftPairs.map(withCorr))
 
     val antagonist = targets.head // family-10 analog of target_10_1
     val ai = targets.indexOf(antagonist)
-    val antiCorrs = targets.indices.filter(_ != ai).map(j => corrM(ai, j))
+    val others = targets.indices.filter(_ != ai)
+    val antiCorrs = others.map(j => corrM(ai, j))
     val antagonistNegShare = antiCorrs.count(_ < 0).toDouble / antiCorrs.size
-    Sinks.writeCsv(
-      targets.indices.filter(_ != ai).map(j => (targets(j), corrM(ai, j)))
-        .toDF("target", "corr_with_antagonist").orderBy(col("corr_with_antagonist")),
-      out("antagonist_corr_slice.csv"))
+    csv("antagonist_corr_slice.csv", Seq("target", "corr_with_antagonist"),
+      sortRows(others.map(j => Row(targets(j), corrM(ai, j))), By(1)))
     // abs-sorted profile variant (reference's target_10_1_profile, `P:175-181`)
-    Sinks.writeCsv(
-      targets.indices.filter(_ != ai)
-        .map(j => (targets(j), corrM(ai, j), math.abs(corrM(ai, j))))
-        .toDF("other_target", "correlation", "abs_correlation")
-        .orderBy(col("abs_correlation").desc, col("other_target")),
-      out("antagonist_profile.csv"))
+    csv("antagonist_profile.csv", Seq("other_target", "correlation", "abs_correlation"),
+      sortRows(others.map(j => Row(targets(j), corrM(ai, j), math.abs(corrM(ai, j)))),
+        By(2, desc = true), By(0)))
 
     tick("5_corr_matrix")
     // ---- 6: clustering on 1−|corr| (k ∈ {3,4,5}) ---------------------------
@@ -150,57 +201,53 @@ object EdaPipeline {
     val (labels4, sil4) = byK(4)
     // per-k quality table: silhouette + cluster-size value counts
     // (reference's target_cluster_quality, `P:186-205`)
-    Sinks.writeCsv(
-      Seq(3, 4, 5).map { k =>
-        val (labels, sil) = byK(k)
-        val sizes = labels.groupBy(identity).values.map(_.size)
-        (k, sil, sizes.max.toDouble / targets.size, sizes.min, sizes.max)
-      }.toDF("k", "silhouette_precomputed", "largest_cluster_share",
-        "min_cluster_size", "max_cluster_size"),
-      out("target_cluster_quality.csv"))
+    csv("target_cluster_quality.csv", Seq("k", "silhouette_precomputed", "largest_cluster_share",
+      "min_cluster_size", "max_cluster_size"), Seq(3, 4, 5).map { k =>
+      val (labels, sil) = byK(k)
+      val sizes = labels.groupBy(identity).values.map(_.size)
+      Row(k, sil, sizes.max.toDouble / targets.size, sizes.min, sizes.max)
+    })
     val families = targets.map(FeatureCatalog.targetFamily).toArray
-    Sinks.writeCsv(
-      targets.indices.map(i => (targets(i), families(i), labels4(i)))
-        .toDF("target", "family", "cluster").orderBy(col("cluster"), col("target")),
-      out("target_cluster_assignments.csv"))
-    Sinks.writeCsv(
-      Clustering.summaries(dist, labels4, families)
-        .map(s => (s.cluster, s.size, s.avgIntraDist, s.dominantGroup, s.dominantShare))
-        .toDF("cluster", "size", "avg_intra_dist", "dominant_family", "dominant_share"),
-      out("target_cluster_summary.csv"))
+    csv("target_cluster_assignments.csv", Seq("target", "family", "cluster"),
+      sortRows(targets.indices.map(i => Row(targets(i), families(i), labels4(i))), By(2), By(0)))
+    csv("target_cluster_summary.csv",
+      Seq("cluster", "size", "avg_intra_dist", "dominant_family", "dominant_share"),
+      Clustering.summaries(dist, labels4, families).map(Row.fromTuple))
     val largestShare = labels4.groupBy(identity).values.map(_.size).max.toDouble / targets.size
 
     tick("6_clustering")
     // ---- 7: main-feature missingness ---------------------------------------
     val mainFeats = mainCat.allFeatures
-    val mainNulls = WideAgg.nullProfile(trainMain, mainFeats)
-      .withColumn("feature_type",
-        when(col("col_name").startsWith("num_"), "numeric").otherwise("categorical"))
-      .withColumn("source", lit("main"))
+    val mainNulls = WideAgg.nullRates(trainMain, mainFeats)
 
     tick("7_main_missing")
     // ---- 8: extra-feature missingness bands --------------------------------
-    val extraNulls = WideAgg.nullProfile(trainExtra, extraCat.numFeatures)
+    val extraNulls = WideAgg.nullRates(trainExtra, extraCat.numFeatures)
     // the combined summary is main ∪ extra (reference `P:249-267`), plus
     // the extra-only slice and its top-10-missing head as separate tables
-    val extraNullsLabeled = extraNulls
-      .withColumn("feature_type", lit("numeric"))
-      .withColumn("source", lit("extra"))
-    Sinks.writeCsv(
-      mainNulls.unionByName(extraNullsLabeled).orderBy(col("null_rate").desc, col("col_name")),
-      out("feature_missingness_summary.csv"))
-    Sinks.writeCsv(extraNullsLabeled.orderBy(col("null_rate").desc, col("col_name")),
-      out("extra_missingness_summary.csv"))
-    Sinks.writeCsv(
-      extraNullsLabeled.orderBy(col("null_rate").desc, col("col_name")).limit(10),
-      out("top10_missing_features.csv"))
-    val banded = extraNulls.withColumn("band", Relational.bandLabel(
-      col("null_rate"),
-      Seq("a_.. <=0.10" -> 0.10001, "b_.. <=0.50" -> 0.50001, "c_.. <=0.90" -> 0.90001,
-        "d_.. <=0.99" -> 0.99001), "e_.. >0.99"))
-    Sinks.writeCsv(
-      banded.groupBy(col("band")).agg(count(lit(1)).as("n_features")).orderBy(col("band")),
-      out("extra_missingness_bands.csv"))
+    val missingHeader = Seq("col_name", "null_rate", "feature_type", "source")
+    def missingRows(rates: Seq[(String, Option[Double])], source: String): Seq[Row] =
+      rates.map { case (c, nr) =>
+        Row(c, nr.getOrElse(null), if (c.startsWith("num_")) "numeric" else "categorical", source)
+      }
+    csv("feature_missingness_summary.csv", missingHeader, sortRows(
+      missingRows(mainNulls, "main") ++ missingRows(extraNulls, "extra"),
+      By(1, desc = true), By(0)))
+    val extraMissing = sortRows(missingRows(extraNulls, "extra"), By(1, desc = true), By(0))
+    csv("extra_missingness_summary.csv", missingHeader, extraMissing)
+    csv("top10_missing_features.csv", missingHeader, extraMissing.take(10))
+    // upper-bound-exclusive bands; a null rate (empty input) falls through
+    // to the last band, as `Relational.bandLabel` does
+    val bands = Seq("a_.. <=0.10" -> 0.10001, "b_.. <=0.50" -> 0.50001,
+      "c_.. <=0.90" -> 0.90001, "d_.. <=0.99" -> 0.99001)
+    def band(nr: Option[Double]): String = nr
+      .flatMap(r => bands.collectFirst { case (label, ub) if r < ub => label })
+      .getOrElse("e_.. >0.99")
+    val bandHeader = Seq("band", "n_features")
+    val bandRows = sortRows(
+      extraNulls.groupBy(x => band(x._2)).toSeq.map { case (b, fs) => Row(b, fs.size.toLong) },
+      By(0))
+    csv("extra_missingness_bands.csv", bandHeader, bandRows)
 
     tick("8_extra_bands")
     // ---- 9: filled-extra-count → deciles, AUC, point-biserial --------------
@@ -211,12 +258,14 @@ object EdaPipeline {
       col("customer_id"),
       WideAgg.flag(WideAgg.horizontalSum(targets) > 0).as("any_open"))
     val joined = filled.join(anyOpen, Seq("customer_id"), "inner").cache()
-    val deciles = Relational.decileExact(joined, Seq(col("filled_extra_count"), col("customer_id")))
+    val decileDf = Relational
+      .decileExact(joined, Seq(col("filled_extra_count"), col("customer_id")))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n"), avg(col("filled_extra_count")).as("avg_filled"),
         avg(col("any_open").cast("double")).as("open_rate"))
-      .orderBy(col("decile"))
-    Sinks.writeCsv(deciles, out("filled_extra_count_deciles.csv"))
+    val decileHeader = decileDf.columns.toSeq
+    val deciles = sortRows(decileDf.collect().toSeq, By(0))
+    csv("filled_extra_count_deciles.csv", decileHeader, deciles)
     val aucRow = Auc.aucDf(joined, col("any_open") === 1, col("filled_extra_count")).collect()(0)
     val filledAuc = aucRow.getAs[Double]("auc")
     val pbRow = joined.agg(
@@ -228,19 +277,16 @@ object EdaPipeline {
 
     tick("9_filled_deciles")
     // ---- 10: missing-indicator AUC (30% sample) ----------------------------
-    val candidates = extraNulls.collect()
-      .map(r => r.getString(0) -> r.getDouble(1))
-      .filter { case (_, nr) => nr > 0.05 && nr < 0.95 }.map(_._1).take(20).toSeq
+    val candidates = extraNulls
+      .collect { case (c, Some(nr)) if nr > 0.05 && nr < 0.95 => c }.take(20)
     val sampled = Sampling.modSample(trainExtra, "customer_id", 30)
       .select((col("customer_id") +: candidates.map(col)): _*)
       .join(anyOpen, Seq("customer_id"), "inner")
       .select((col("any_open") +: candidates.map(c => col(c).isNotNull.cast("int").as(c))): _*)
     // all indicator AUCs in ONE aggregate pass (binary-score closed form)
-    val indAuc = Auc.binaryAucProfile(sampled, col("any_open") === 1, candidates)
-    Sinks.writeCsv(
-      indAuc.withColumnRenamed("col_name", "feature")
-        .orderBy(col("abs_auc").desc, col("feature")),
-      out("missing_indicator_auc.csv"))
+    val indAuc = sortRows(Auc.binaryAucProfile(sampled, col("any_open") === 1, candidates),
+      By(2, desc = true), By(0))
+    csv("missing_indicator_auc.csv", Seq("feature", "auc", "abs_auc"), indAuc)
 
     tick("10_missing_auc")
     // ---- 11: categorical dictionaries + unseen test categories -------------
@@ -264,28 +310,22 @@ object EdaPipeline {
     val unseenAgg = testGroups.join(trainGroups, Seq("feature", "value"), "left_anti")
       .groupBy("feature")
       .agg(count(lit(1)).as("unseen_test_values"), sum("n_te").as("unseen_rows"))
-    val catStats = trainGroups.groupBy("feature").agg(count(lit(1)).as("train_cardinality"))
+    val catStatsDf = trainGroups.groupBy("feature").agg(count(lit(1)).as("train_cardinality"))
       .join(testGroups.groupBy("feature").agg(count(lit(1)).as("test_cardinality")),
         Seq("feature"))
       .join(unseenAgg, Seq("feature"), "left")
       .select(col("feature"), col("train_cardinality"), col("test_cardinality"),
         coalesce(col("unseen_test_values"), lit(0L)).as("unseen_test_values"),
         (coalesce(col("unseen_rows"), lit(0L)) / testRows.toDouble).as("unseen_row_rate"))
-      .orderBy(col("feature"))
-      .collect().toSeq
+    val catStats = sortRows(catStatsDf.collect().toSeq, By(0))
     trainGroups.unpersist(); testGroups.unpersist()
-    Sinks.writeCsv(
-      catStats.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-        .toDF("feature", "train_cardinality", "test_cardinality",
-          "unseen_test_values", "unseen_row_rate"),
-      out("categorical_cardinality.csv"))
+    csv("categorical_cardinality.csv", catStatsDf.columns.toSeq, catStats)
     // unseen-values slice sorted by test-row impact (reference's
     // categorical_unseen_categories, `P:398-405`)
-    Sinks.writeCsv(
-      catStats.map(r => (r.getString(0), r.getLong(3), r.getDouble(4)))
-        .toDF("feature", "unseen_unique_categories", "unseen_rate_test_rows")
-        .orderBy(col("unseen_rate_test_rows").desc, col("feature")),
-      out("categorical_unseen_categories.csv"))
+    csv("categorical_unseen_categories.csv",
+      Seq("feature", "unseen_unique_categories", "unseen_rate_test_rows"),
+      sortRows(catStats.map(r => Row(r.getString(0), r.getLong(3), r.getDouble(4))),
+        By(2, desc = true), By(0)))
     val unseenFeatures = catStats.count(_.getLong(3) > 0)
 
     tick("11_cat_dicts")
@@ -295,14 +335,12 @@ object EdaPipeline {
       Sampling.modSample(trainMain, "customer_id", 20),
       Sampling.modSample(testMain, "customer_id", 20),
       advCols, maxIter = 15, maxDepth = 4)
-    Sinks.writeCsv(Seq(("train_vs_test", advAuc)).toDF("experiment", "auc"),
-      out("adversarial_auc.csv"))
+    csv("adversarial_auc.csv", Seq("experiment", "auc"), Seq(Row("train_vs_test", advAuc)))
 
     tick("12_adversarial")
     // ---- 13: linear screening (12% sample, impute, cross-corr) -------------
-    val screenFeats = mainCat.numFeatures ++
-      extraNulls.collect().map(r => r.getString(0) -> r.getDouble(1))
-        .filter(_._2 < 0.95).map(_._1).toSeq
+    val screenFeats =
+      mainCat.numFeatures ++ extraNulls.collect { case (c, Some(nr)) if nr < 0.95 => c }
     val screenSample = Sampling.modSample(trainMain, "customer_id", 12)
       .select((col("customer_id") +: mainCat.numFeatures.map(col)): _*)
       .join(Sampling.modSample(trainExtra, "customer_id", 12)
@@ -312,83 +350,72 @@ object EdaPipeline {
       .join(Sampling.modSample(trainTarget, "customer_id", 12), Seq("customer_id"), "inner")
       .cache()
     val screenRows = screenSample.count()
-    val linear = Correlations.crossCorr(screenSample, screenFeats, targets)
-    Sinks.writeCsv(linear.orderBy(col("feature"), col("target")),
-      out("feature_target_linear_corr.csv"))
-    val top10 = Relational.topKPerGroup(
-      linear.na.drop(Seq("corr")), Seq("target"), Seq(col("abs_corr").desc, col("feature")), 10)
-    Sinks.writeCsv(top10.orderBy(col("target"), col("rk")), out("top10_features_per_target.csv"))
+    val linear = Correlations.crossCorrRows(screenSample, screenFeats, targets)
+    screenSample.unpersist()
+    val linearHeader = Seq("feature", "target", "corr", "abs_corr")
+    csv("feature_target_linear_corr.csv", linearHeader, sortRows(linear, By(0), By(1)))
+    // the defined correlations (`na.drop` on corr drops NaN and null)
+    val screened = linear.filterNot(r => r.isNullAt(2) || r.getDouble(2).isNaN)
+    val top10 = rankWithin(screened, 1, By(3, desc = true), By(0))
+      .collect { case (r, rk) if rk <= 10 => Row.fromSeq(r.toSeq :+ rk) }
+    csv("top10_features_per_target.csv", linearHeader :+ "rk", top10)
 
     // feature provenance for the mix/signal tables
     val mainFeatSet = (mainCat.numFeatures ++ mainCat.catFeatures).toSet
-    val withMeta = top10
-      .withColumn("source",
-        when(col("feature").isin(mainFeatSet.toSeq: _*), "main").otherwise("extra"))
-      .withColumn("feature_type",
-        when(col("feature").startsWith("cat_"), "categorical").otherwise("numeric"))
+    def source(f: String): String = if (mainFeatSet(f)) "main" else "extra"
+    def featureType(f: String): String = if (f.startsWith("cat_")) "categorical" else "numeric"
 
     // per-target composition of the top-10 list (reference `P:539-551`)
-    Sinks.writeCsv(
-      withMeta.groupBy(col("target")).agg(
-        avg(col("abs_corr")).as("mean_abs_corr_top10"),
-        sum(when(col("feature_type") === "categorical", 1).otherwise(0)).as("n_cat_top10"),
-        sum(when(col("feature_type") === "numeric", 1).otherwise(0)).as("n_num_top10"),
-        sum(when(col("source") === "main", 1).otherwise(0)).as("n_main_top10"),
-        sum(when(col("source") === "extra", 1).otherwise(0)).as("n_extra_top10"))
-        .orderBy(col("mean_abs_corr_top10").desc, col("target")),
-      out("target_top10_feature_mix.csv"))
+    csv("target_top10_feature_mix.csv", Seq("target", "mean_abs_corr_top10", "n_cat_top10",
+      "n_num_top10", "n_main_top10", "n_extra_top10"), sortRows(
+      top10.groupBy(_.getString(1)).toSeq.map { case (t, rs) =>
+        val fs = rs.map(_.getString(0))
+        def n(p: String => Boolean): Long = fs.count(p).toLong
+        Row(t, mean(rs.map(_.getDouble(3))), n(featureType(_) == "categorical"),
+          n(featureType(_) == "numeric"), n(source(_) == "main"), n(source(_) == "extra"))
+      }, By(1, desc = true), By(0)))
 
     // universality via top-10 membership (reference `P:553-563`; the full-
     // screen variant below stays as feature_universality.csv)
-    Sinks.writeCsv(
-      withMeta.groupBy(col("feature")).agg(
-        countDistinct(col("target")).as("n_targets_top10"),
-        avg(col("abs_corr")).as("mean_abs_corr_when_top10"),
-        max(col("abs_corr")).as("max_abs_corr_when_top10"))
-        .orderBy(col("n_targets_top10").desc, col("mean_abs_corr_when_top10").desc,
-          col("feature")),
-      out("feature_universality_top10.csv"))
+    csv("feature_universality_top10.csv", Seq("feature", "n_targets_top10",
+      "mean_abs_corr_when_top10", "max_abs_corr_when_top10"), sortRows(
+      top10.groupBy(_.getString(0)).toSeq.map { case (f, rs) =>
+        val abs = rs.map(_.getDouble(3))
+        Row(f, rs.map(_.getString(1)).distinct.size.toLong, mean(abs), abs.max(SqlDouble))
+      }, By(1, desc = true), By(2, desc = true), By(0)))
 
     // full-screen signal summary with provenance + null rate (reference
     // `P:565-585`)
-    val featNullRates = mainNulls.select(col("col_name").as("feature"), col("null_rate"))
-      .unionByName(extraNulls.select(col("col_name").as("feature"), col("null_rate")))
-    Sinks.writeCsv(
-      linear.na.drop(Seq("corr")).groupBy(col("feature")).agg(
-        max(col("abs_corr")).as("max_abs_corr"),
-        avg(col("abs_corr")).as("mean_abs_corr"),
-        sum(when(col("abs_corr") > 0.05, 1).otherwise(0)).as("n_targets_abs_corr_gt_005"),
-        sum(when(col("abs_corr") > 0.10, 1).otherwise(0)).as("n_targets_abs_corr_gt_010"))
-        .withColumn("source",
-          when(col("feature").isin(mainFeatSet.toSeq: _*), "main").otherwise("extra"))
-        .withColumn("feature_type",
-          when(col("feature").startsWith("cat_"), "categorical").otherwise("numeric"))
-        .join(featNullRates, Seq("feature"), "left")
-        .orderBy(col("max_abs_corr").desc, col("mean_abs_corr").desc, col("feature")),
-      out("feature_signal_summary.csv"))
+    val nullRateOf = (mainNulls ++ extraNulls).toMap
+    val absByFeature = screened.groupBy(_.getString(0)).toSeq
+      .map { case (f, rs) => f -> rs.map(_.getDouble(3)) }
+    csv("feature_signal_summary.csv", Seq("feature", "max_abs_corr", "mean_abs_corr",
+      "n_targets_abs_corr_gt_005", "n_targets_abs_corr_gt_010", "source", "feature_type",
+      "null_rate"), sortRows(
+      absByFeature.map { case (f, abs) =>
+        Row(f, abs.max(SqlDouble), mean(abs), abs.count(_ > 0.05).toLong,
+          abs.count(_ > 0.10).toLong, source(f), featureType(f),
+          nullRateOf.get(f).flatten.getOrElse(null))
+      }, By(1, desc = true), By(2, desc = true), By(0)))
 
     // convenience slice: top-5 linear rows for a fixed target set
     // (reference's golden_linear_top5_selected_targets, `P:587-594`;
     // selection is deterministic — first 4 targets in catalog order)
-    val selectedTargets = targets.take(4)
-    Sinks.writeCsv(
-      Relational.topKPerGroup(
-        linear.na.drop(Seq("corr")).where(col("target").isin(selectedTargets: _*)),
-        Seq("target"), Seq(col("abs_corr").desc, col("feature")), 5)
-        .orderBy(col("target"), col("rk")),
-      out("golden_linear_top5_selected_targets.csv"))
-    screenSample.unpersist()
+    val selectedTargets = targets.take(4).toSet
+    csv("golden_linear_top5_selected_targets.csv", linearHeader :+ "rk",
+      rankWithin(screened.filter(r => selectedTargets(r.getString(1))), 1,
+        By(3, desc = true), By(0))
+        .collect { case (r, rk) if rk <= 5 => Row.fromSeq(r.toSeq :+ rk) })
 
     tick("13_screening")
     // ---- 14: feature universality ------------------------------------------
-    val universality = linear.na.drop(Seq("corr")).groupBy(col("feature"))
-      .agg(
-        sum(when(col("abs_corr") > 0.05, 1).otherwise(0)).as("n_targets_gt05"),
-        avg(col("abs_corr")).as("mean_abs_corr"),
-        max(col("abs_corr")).as("max_abs_corr"),
-        median(col("abs_corr")).as("median_abs_corr"))
-      .orderBy(col("n_targets_gt05").desc, col("mean_abs_corr").desc, col("feature"))
-    Sinks.writeCsv(universality, out("feature_universality.csv"))
+    val universalityHeader =
+      Seq("feature", "n_targets_gt05", "mean_abs_corr", "max_abs_corr", "median_abs_corr")
+    val universality = sortRows(
+      absByFeature.map { case (f, abs) =>
+        Row(f, abs.count(_ > 0.05).toLong, mean(abs), abs.max(SqlDouble), median(abs))
+      }, By(1, desc = true), By(2, desc = true), By(0))
+    csv("feature_universality.csv", universalityHeader, universality)
 
     tick("14_universality")
     // ---- 15: whale signals (p99 cut × rare targets, Fisher) ----------------
@@ -425,35 +452,25 @@ object EdaPipeline {
       val baseRate = tot.toDouble / nW
       val lift = if (baseRate > 0) whaleRate / baseRate else Double.NaN
       val p = StatTests.fisherExactGreater(a, b, c, d)
-      (f, t, nWhale, a, lift, p)
+      Row(f, t, nWhale, a, lift, p)
     }
-    val whaleDf = whaleRows
-      .toDF("feature", "target", "n_whales", "n_whale_pos", "lift", "p_value")
-      .orderBy(col("p_value"), col("feature"), col("target"))
-    Sinks.writeCsv(whaleDf, out("whale_signals.csv"))
+    val whaleHeader = Seq("feature", "target", "n_whales", "n_whale_pos", "lift", "p_value")
+    val whales = sortRows(whaleRows, By(5), By(0), By(1))
+    csv("whale_signals.csv", whaleHeader, whales)
     // candidate rollup + top-3 per target over the SIGNIFICANT slice
-    // (reference `P:652-669`); whaleRows is a driver-side list (≤ features
-    // × rare targets), so these are local transforms
-    val sigWhales = whaleRows.filter(r => !r._5.isNaN && r._5 >= 2.0 && r._6 < 0.05)
-    val whaleCandidates = sigWhales.groupBy(_._1).map { case (f, rs) =>
-      val lifts = rs.map(_._5).sorted
-      val median =
-        if (lifts.size % 2 == 1) lifts(lifts.size / 2)
-        else (lifts(lifts.size / 2 - 1) + lifts(lifts.size / 2)) / 2.0
-      (f, rs.map(_._2).distinct.size, median, lifts.last, rs.map(_._6).min)
-    }.toSeq
-    Sinks.writeCsv(
-      whaleCandidates
-        .toDF("feature", "n_rare_targets", "median_lift", "max_lift", "min_pvalue")
-        .orderBy(col("n_rare_targets").desc, col("median_lift").desc, col("feature")),
-      out("whale_feature_candidates.csv"))
-    Sinks.writeCsv(
-      sigWhales.groupBy(_._2).toSeq.flatMap { case (_, rs) =>
-        rs.sortBy(r => (-r._5, r._1)).take(3)
-      }.toDF("feature", "target", "n_whales", "n_whale_pos", "lift", "p_value")
-        .orderBy(col("target"), col("lift").desc, col("feature")),
-      out("whale_top3_per_target.csv"))
-    val whaleSig = whaleRows.count(r => r._5 >= 2.0 && r._6 < 0.05).toLong
+    // (reference `P:652-669`)
+    def significant(r: Row): Boolean = r.getDouble(4) >= 2.0 && r.getDouble(5) < 0.05
+    val sigWhales = whaleRows.filter(significant)
+    csv("whale_feature_candidates.csv",
+      Seq("feature", "n_rare_targets", "median_lift", "max_lift", "min_pvalue"), sortRows(
+      sigWhales.groupBy(_.getString(0)).toSeq.map { case (f, rs) =>
+        val lifts = rs.map(_.getDouble(4))
+        Row(f, rs.map(_.getString(1)).distinct.size, median(lifts), lifts.max(SqlDouble),
+          rs.map(_.getDouble(5)).min(SqlDouble))
+      }, By(1, desc = true), By(2, desc = true), By(0)))
+    csv("whale_top3_per_target.csv", whaleHeader,
+      rankWithin(sigWhales, 1, By(4, desc = true), By(0)).collect { case (r, rk) if rk <= 3 => r })
+    val whaleSig = sigWhales.size.toLong
 
     tick("15_whales")
     // ---- 16: summary.json + report.md --------------------------------------
@@ -493,17 +510,16 @@ object EdaPipeline {
          |- extra features: ${extraCat.numFeatures.size} (heavily null)
          |
          |## 2. Target stats (top 10 by positive count)
-         |${Sinks.pretty(targetStatsDf, 10)}
+         |${Sinks.prettyRows(targetStatsHeader, targetStatsRows)}
          |
          |## 3. Family rollup
-         |${Sinks.pretty(familyStats, 10)}
+         |${Sinks.prettyRows(familyHeader, familyRows)}
          |
          |## 4. Opened-target distribution
-         |${Sinks.pretty(opened.groupBy(col("n_opened")).count().orderBy(col("n_opened")), 10)}
+         |${Sinks.prettyRows(Seq("n_opened", "count"), openedRows)}
          |
          |## 5. Strongest co-occurring target pairs (co_count ≥ 10, by lift)
-         |${Sinks.pretty(pairDf.where(col("co_count") >= 10)
-              .orderBy(col("pair_lift").desc, col("col_a"), col("col_b")), 10)}
+         |${Sinks.prettyRows(pairHeader, topLiftPairs)}
          |
          |## 6. Antagonist target `$antagonist`
          |- negative-correlation share vs other targets: ${f"$antagonistNegShare%.3f"}
@@ -513,17 +529,16 @@ object EdaPipeline {
          |- largest-cluster share at k=4: ${f"$largestShare%.3f"}
          |
          |## 8. Extra-feature missingness bands
-         |${Sinks.pretty(banded.groupBy(col("band")).agg(count(lit(1)).as("n_features"))
-              .orderBy(col("band")), 10)}
+         |${Sinks.prettyRows(bandHeader, bandRows)}
          |
          |## 9. Filled-extra-count signal
          |- AUC vs any-open: ${f"$filledAuc%.4f"}
          |- point-biserial r: ${f"$filledPb%.4f"} (p = ${f"$filledPbP%.3g"})
          |- deciles:
-         |${Sinks.pretty(deciles, 10)}
+         |${Sinks.prettyRows(decileHeader, deciles)}
          |
          |## 10. Top missing-indicator AUCs (30% sample)
-         |${Sinks.pretty(indAuc.orderBy(col("abs_auc").desc, col("col_name")), 10)}
+         |${Sinks.prettyRows(Seq("col_name", "auc", "abs_auc"), indAuc)}
          |
          |## 11. Categorical dictionaries
          |- features with unseen test categories: $unseenFeatures
@@ -533,10 +548,10 @@ object EdaPipeline {
          |
          |## 13. Linear screen (12% sample, $screenRows rows, ${screenFeats.size} features)
          |top universal features:
-         |${Sinks.pretty(universality, 10)}
+         |${Sinks.prettyRows(universalityHeader, universality)}
          |
          |## 14. Whale signals (top 10 by p-value)
-         |${Sinks.pretty(whaleDf, 10)}
+         |${Sinks.prettyRows(whaleHeader, whales)}
          |- significant (lift ≥ 2, p < 0.05): $whaleSig
          |""".stripMargin
     Sinks.writeText(report, out("report.md"))

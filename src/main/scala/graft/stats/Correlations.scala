@@ -114,23 +114,25 @@ object Correlations {
     * before its centered XᵀY grid, `P:496-499`; VectorAssembler would
     * otherwise throw on nulls). Returns (feature, target, corr, abs_corr). */
   def crossCorr(df: DataFrame, features: Seq[String], targets: Seq[String]): DataFrame = {
-    val all = features ++ targets
-    val imputed = imputeMeans(df, features)
-    val m = corrMatrix(imputed, all, dropNullRows = false)
-    val spark = df.sparkSession
-    val nf = features.length
-    val rows = for {
-      i <- features.indices
-      j <- targets.indices
-    } yield Row(features(i), targets(j), m(i, nf + j), math.abs(m(i, nf + j)))
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.asJava,
+    df.sparkSession.createDataFrame(
+      crossCorrRows(df, features, targets).asJava,
       StructType(Seq(
         StructField("feature", StringType, nullable = false),
         StructField("target", StringType, nullable = false),
         StructField("corr", DoubleType, nullable = true),
         StructField("abs_corr", DoubleType, nullable = true))))
+  }
+
+  /** [[crossCorr]]'s grid as driver rows, in feature-major catalog order. */
+  def crossCorrRows(df: DataFrame, features: Seq[String], targets: Seq[String]): IndexedSeq[Row] = {
+    val imputed = imputeMeans(df, features)
+    val m = corrMatrix(imputed, features ++ targets, dropNullRows = false)
+    val nf = features.length
+    for {
+      i <- features.indices
+      j <- targets.indices
+    } yield Row(features(i), targets(j), m(i, nf + j), math.abs(m(i, nf + j)))
   }
 
   /** Pairwise co-occurrence counts and lift for binary 0/1 columns via the
@@ -183,7 +185,20 @@ object Correlations {
     * Counts are exact (0/1 inputs ⇒ integer-valued doubles below 2^53).
     * Same output schema as [[pairLift]]. */
   def pairLiftGramian(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
+    import scala.jdk.CollectionConverters._
+    df.sparkSession.createDataFrame(
+      pairLiftGramianRows(df, cols).asJava,
+      StructType(Seq(
+        StructField("col_a", StringType, nullable = false),
+        StructField("col_b", StringType, nullable = false),
+        StructField("count_a", LongType, nullable = false),
+        StructField("count_b", LongType, nullable = false),
+        StructField("co_count", LongType, nullable = false),
+        StructField("pair_lift", DoubleType, nullable = true))))
+  }
+
+  /** [[pairLiftGramian]]'s pairs as driver rows, a < b in catalog order. */
+  def pairLiftGramianRows(df: DataFrame, cols: Seq[String]): IndexedSeq[Row] = {
     val k = cols.length
     val tlen = k * (k + 1) / 2
     val casted = df.select(cols.map(c => coalesce(col(c).cast(DoubleType), lit(0.0)).as(c)): _*)
@@ -221,7 +236,7 @@ object Correlations {
     val n = buf(tlen)
     // row i of the upper triangle starts at i*k - i*(i-1)/2; requires i <= j.
     def gram(i: Int, j: Int): Double = buf(i * k - i * (i - 1) / 2 + (j - i))
-    val rows = for { i <- 0 until k; j <- 0 until k if i < j } yield {
+    for { i <- 0 until k; j <- 0 until k if i < j } yield {
       val ca = gram(i, i).toLong
       val cb = gram(j, j).toLong
       val co = gram(i, j).toLong
@@ -230,15 +245,5 @@ object Correlations {
       val lift = if (pa > 0 && pb > 0) ((co / n) / (pa * pb)) else Double.NaN
       Row(cols(i), cols(j), ca, cb, co, lift)
     }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.asJava,
-      StructType(Seq(
-        StructField("col_a", StringType, nullable = false),
-        StructField("col_b", StringType, nullable = false),
-        StructField("count_a", LongType, nullable = false),
-        StructField("count_b", LongType, nullable = false),
-        StructField("co_count", LongType, nullable = false),
-        StructField("pair_lift", DoubleType, nullable = true))))
   }
 }

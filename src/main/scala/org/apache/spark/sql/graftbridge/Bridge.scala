@@ -36,12 +36,22 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.executePlan(plan).sparkPlan
 
-  /** Block until the listener bus has delivered every queued event —
+  /** Wait until the listener bus has delivered every queued event —
     * profiling tools attribute job/stage/task counts to the query that
     * just ran, and the bus is asynchronous (`listenerBus` is
-    * `private[spark]`, reachable from this package). */
+    * `private[spark]`, reachable from this package). Bounded: on a
+    * backlogged bus it logs after 60 s and returns, so the caller reads
+    * a slightly stale count instead of aborting (the no-arg
+    * `waitUntilEmpty()` throws after 10 s). */
   def waitListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
+    try spark.sparkContext.listenerBus.waitUntilEmpty(BusDrainTimeoutMs)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        System.err.println(
+          s"[graftbridge] listener bus not drained after $BusDrainTimeoutMs ms; counts may lag")
+    }
+
+  private val BusDrainTimeoutMs = 60000L
 
   def injectedFunctionNames(
       ext: org.apache.spark.sql.SparkSessionExtensions): Seq[String] = {
